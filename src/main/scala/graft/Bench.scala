@@ -282,7 +282,7 @@ object Bench {
     * reference's genuinely cold one). The first query keeps the legacy
     * metric name.
     *
-    * Round-11 profile finding (tools/Prof): the 8k-doc cold pass splits
+    * Round-11 profile finding: the 8k-doc cold pass splits
     * compile ~1.4 s / parse ~130 ms / eval ~120 ms on a COLD JVM — the
     * dominant cost is one-time class loading + JIT, which the warmup
     * block below amortises, landing b_doc_cold_8k at 0.17-0.19 s

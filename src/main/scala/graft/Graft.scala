@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.Tables
 import graft.jexpr.{Expr, Jetro, JValue}
-import graft.plans.Lower
+import graft.plans.{Bail, Lower}
 
 /** Public engine entry point: run a jetro expression against the tables
   * under `sfDir`.
@@ -19,23 +19,42 @@ import graft.plans.Lower
   */
 object Graft {
 
-  def query(spark: SparkSession, sfDir: String, expr: String): DataFrame =
-    Lower.tryCompile(expr, t => Tables(spark, sfDir, t))
-      .orElse(rowwiseCompile(spark, sfDir, expr))
-      .getOrElse(docFallback(spark, sfDir, expr))
+  /** The rung [[query]] runs an expression on, decided once:
+    *   - `"relational"` — full Catalyst lowering ([[Lower]]); `lowered`
+    *     holds the DataFrame;
+    *   - `"rowwise"`    — distributed per-row interpreter fallback;
+    *   - `"document"`   — driver-side whole-document interpreter.
+    * Off the relational rung, `bail` is the first reason the lowering
+    * refused. */
+  final case class Decision(
+      rung: String, lowered: Option[DataFrame], bail: Option[Bail])
+
+  /** Try the lowering once and name the rung. Builds nothing for the
+    * per-row rungs: no persist, no interpreter pass. */
+  def decide(spark: SparkSession, sfDir: String, expr: String): Decision =
+    Lower.compileOrBail(expr, t => Tables(spark, sfDir, t)) match {
+      case Right(df) => Decision("relational", Some(df), None)
+      case Left(why) =>
+        Decision(if (rowwiseTarget(expr).isDefined) "rowwise" else "document",
+          None, Some(why))
+    }
+
+  def query(spark: SparkSession, sfDir: String, expr: String): DataFrame = {
+    val d = decide(spark, sfDir, expr)
+    d.rung match {
+      case "relational" => d.lowered.get
+      case "rowwise"    => rowwiseCompile(spark, sfDir, expr).get
+      case _            => docFallback(spark, sfDir, expr)
+    }
+  }
 
   /** True when the expression fully lowers to a Catalyst plan. */
   def lowers(spark: SparkSession, sfDir: String, expr: String): Boolean =
-    Lower.tryCompile(expr, t => Tables(spark, sfDir, t)).isDefined
+    decide(spark, sfDir, expr).rung == "relational"
 
-  /** Which execution path [[query]] takes for `expr`:
-    *   - `"relational"` — full Catalyst lowering ([[Lower]]);
-    *   - `"rowwise"`    — distributed per-row interpreter fallback;
-    *   - `"document"`   — driver-side whole-document interpreter. */
+  /** Which execution path [[query]] takes for `expr` (see [[Decision]]). */
   def backend(spark: SparkSession, sfDir: String, expr: String): String =
-    if (lowers(spark, sfDir, expr)) "relational"
-    else if (rowwisePlan(expr).exists(p => Tables.names.contains(p._1))) "rowwise"
-    else "document"
+    decide(spark, sfDir, expr).rung
 
   /** Pipeline stages that distribute over stream concatenation:
     * `f(rowsA ++ rowsB) == f(rowsA) ++ f(rowsB)` because each element
@@ -308,9 +327,13 @@ object Graft {
     rowwiseCache.clear()
   }
 
+  /** [[rowwisePlan]] over a known table: the rowwise rung's eligibility. */
+  private def rowwiseTarget(expr: String): Option[(String, String)] =
+    rowwisePlan(expr).filter(p => Tables.names.contains(p._1))
+
   private[graft] def rowwiseCompile(
       spark: SparkSession, sfDir: String, expr: String): Option[DataFrame] =
-    rowwisePlan(expr).filter(p => Tables.names.contains(p._1)).map {
+    rowwiseTarget(expr).map {
       case (table, evalExpr) =>
         val key = RowwiseKey(spark, sfDir, table, evalExpr)
         val hit = rowwiseCache.synchronized {

@@ -71,10 +71,12 @@ object Tables {
   //    reader). The spread now applies only to bare scan lineages
   //    (Project/Filter over one file relation), where effective
   //    parallelism is read driver-side from the file index + parquet
-  //    footers. Row groups, not byte splits, are the probe's unit: a
-  //    byte-split of a single-row-group file yields empty tasks, so
-  //    `.rdd.getNumPartitions` OVERCOUNTED on large single-group files
-  //    and silently disabled the spread exactly where it mattered.
+  //    footers. The probe's unit is a file's row groups capped at its
+  //    byte splits: a byte-split of a single-row-group file yields
+  //    empty tasks, so `.rdd.getNumPartitions` OVERCOUNTED on large
+  //    single-group files, and a small file of many tiny row groups
+  //    is still one split — either overcount silently disables the
+  //    spread exactly where it matters.
   //  * The exchange is a deterministic hash repartition on xxhash64 of
   //    the row's hashable columns, not round-robin: round-robin's
   //    sortBeforeRepartition runs a full local sort INSIDE the one scan
@@ -119,16 +121,24 @@ object Tables {
       case _ => None
     }
     relation(df.queryExecution.logical).map { fs =>
-      val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
+      val dirs = fs.location.listFiles(Nil, Nil)
+      val files = dirs.flatMap(_.files)
       if (files.length >= want) files.length
       else {
         val conf = df.sparkSession.sparkContext.hadoopConfiguration
+        // the scan packs byte splits of this size into its tasks, so a
+        // file yields at most ceil(len / split) tasks however many row
+        // groups it holds (a small file of tiny row groups is ONE task)
+        val split = org.apache.spark.sql.execution.datasources.FilePartition
+          .maxSplitBytes(df.sparkSession, dirs)
         var groups = 0
         val it = files.iterator
         // early-stop: past `want` groups the exact count is irrelevant
         while (it.hasNext && groups < want) {
           val f = it.next()
-          groups += rowGroups(f.getPath, f.getLen, f.getModificationTime, conf)
+          val splits = math.max(1L, (f.getLen + split - 1) / split)
+          groups += math.min(splits,
+            rowGroups(f.getPath, f.getLen, f.getModificationTime, conf).toLong).toInt
         }
         math.max(groups, 1)
       }

@@ -28,7 +28,16 @@ import Expr._
   */
 final class LowerException(msg: String) extends RuntimeException(msg)
 
+/** Why an expression did not lower: the escaping exception's class and
+  * message (a `bail(...)` site, a parse error, or a Catalyst analysis
+  * error) and the expression text it was compiling. */
+final case class Bail(exception: String, message: String, expr: String) {
+  override def toString: String = s"$exception: $message [in $expr]"
+}
+
 object Lower {
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.plans.Lower")
 
   /** Constant-zero partition key for windows whose input is PROVABLY
     * tiny (a handful of rows) and single-partition is the intent. It
@@ -217,7 +226,7 @@ object Lower {
     * whose every leaf the static walker types. The returned schema
     * reproduces what inference WOULD produce on the same lines —
     * struct fields sorted by name recursively (Spark's JSON inference
-    * canonicalises that way, probed in tools/InferProbe), every field
+    * canonicalises that way, pinned in RowwiseFallbackSpec), every field
     * nullable, integral kinds widened to long, fractional to double
     * (renderDouble always keeps a `.` so a double lane can never infer
     * integral), dates/timestamps/binary as the strings RowBridge
@@ -551,31 +560,50 @@ object Lower {
     case other => spreadChildren(other).exists(hasHeavy)
   }
 
+  /** True when no rooted pipeline anywhere in `e` applies a positional
+    * op to unsorted physical order. The spread wraps EVERY table the
+    * expression resolves, so a nested `$.t.take(n)` (a join, diff or
+    * union right side, a patch target, a `let` init, a comprehension
+    * clause) would read the permuted order just like the top chain. */
+  private def positionalSafe(e: Expr): Boolean = {
+    val here = e match {
+      case Chain(Root, steps) =>
+        var ordered = false // an explicit sort is active
+        steps.forall {
+          case Step.Slice(_, _) => ordered
+          case Step.Method(n, _) =>
+            val ok = ordered || !positionalMethods(n)
+            if (n == "sort" || n == "sort_by") ordered = true
+            else if (regroupMethods(n)) ordered = false
+            ok
+          case _ => true
+        }
+      case _ => true
+    }
+    here && spreadChildren(e).forall(positionalSafe)
+  }
+
   /** AST-driven spread decision (r12; replaces the r11 text regex —
     * string literals containing ".split(" no longer trigger it, and the
     * scope/order rules below are checkable against parsed structure).
     * True when per-row-heavy work sits below the first row-regrouping
     * step AND no positional op reads unsorted physical order. */
-  private[plans] def shouldSpread(ast: Expr): Boolean = ast match {
-    case Chain(Root, steps) =>
-      var ordered = false  // an explicit sort is active
-      var scanning = true  // still below the first row-regrouping step
-      var heavy = false
-      var safe = true
-      steps.foreach {
-        case Step.Slice(_, _) => if (!ordered) safe = false
-        case Step.Method(n, as) =>
-          if (positionalMethods(n) && !ordered) safe = false
-          if (scanning && (heavyMethods(n) || as.exists(a => hasHeavy(a.e))))
-            heavy = true
-          if (n == "sort" || n == "sort_by") ordered = true
-          else if (regroupMethods(n)) { scanning = false; ordered = false }
-        case s =>
-          if (scanning && stepExprs(s).exists(hasHeavy)) heavy = true
-      }
-      safe && heavy
-    case other => hasHeavy(other)
-  }
+  private[plans] def shouldSpread(ast: Expr): Boolean =
+    positionalSafe(ast) && (ast match {
+      case Chain(Root, steps) =>
+        var scanning = true // still below the first row-regrouping step
+        var heavy = false
+        steps.foreach {
+          case Step.Method(n, as) =>
+            if (scanning && (heavyMethods(n) || as.exists(a => hasHeavy(a.e))))
+              heavy = true
+            if (regroupMethods(n)) scanning = false
+          case s =>
+            if (scanning && stepExprs(s).exists(hasHeavy)) heavy = true
+        }
+        heavy
+      case other => hasHeavy(other)
+    })
 
   private def spreadIfHeavy(
       ast: Expr, resolve: String => DataFrame): String => DataFrame =
@@ -589,17 +617,26 @@ object Lower {
     compileAst(ast, spreadIfHeavy(ast, resolve))
   }
 
+  /** [[compile]], or the reason it refused (see [[attempt]]). */
+  def compileOrBail(expr: String, resolve: String => DataFrame): Either[Bail, DataFrame] =
+    attempt(expr)(compile(expr, resolve))
+
   def tryCompile(expr: String, resolve: String => DataFrame): Option[DataFrame] =
-    try Some(compile(expr, resolve))
+    compileOrBail(expr, resolve).toOption
+
+  /** The fallback contract of both lowerings: a `bail`, a parse error
+    * (the document rung re-parses and surfaces the descriptive error
+    * itself) or an unresolvable plan (type mismatch, missing column)
+    * means "doesn't lower" and becomes a [[Bail]], never an error the
+    * caller sees. */
+  private def attempt[A](expr: String)(body: => A): Either[Bail, A] =
+    try Right(body)
     catch {
-      case _: LowerException => None
-      // parse errors fall through too — the document-mode fallback
-      // re-parses and surfaces the descriptive error itself
-      case _: graft.jexpr.ParseException => None
-      // a lowering that produces an unresolvable plan (type mismatch,
-      // missing column) must honour the fallback contract as well, not
-      // surface Catalyst's analysis error to the caller
-      case _: org.apache.spark.sql.AnalysisException => None
+      case e @ (_: LowerException | _: graft.jexpr.ParseException |
+                _: org.apache.spark.sql.AnalysisException) =>
+        val why = Bail(e.getClass.getSimpleName, e.getMessage, expr)
+        if (log.isDebugEnabled) log.debug(s"lowering refused: $why")
+        Left(why)
     }
 
   /** Row-scope document compile: a per-document jetro expression →
@@ -614,21 +651,8 @@ object Lower {
   def compileDocColumn(
       expr: String, doc: Column,
       docType: org.apache.spark.sql.types.StructType): Option[Column] =
-    try Some(new ColLower(None, rootStruct = Some((doc, docType)))
-      .colExpr(parseCached(expr)))
-    catch {
-      case e: LowerException             =>
-        if (sys.env.contains("GRAFT_LOWER_DEBUG")) println(s"[lower-bail] $expr: ${e.getMessage}")
-        None
-      case e: graft.jexpr.ParseException =>
-        if (sys.env.contains("GRAFT_LOWER_DEBUG")) println(s"[lower-parse] $expr: ${e.getMessage}")
-        None
-      // an unresolvable column expression honours the fallback contract
-      // like tryCompile does — analysis errors mean "doesn't lower"
-      case e: org.apache.spark.sql.AnalysisException =>
-        if (sys.env.contains("GRAFT_LOWER_DEBUG")) println(s"[lower-analysis] $expr: ${e.getMessage}")
-        None
-    }
+    attempt(expr)(new ColLower(None, rootStruct = Some((doc, docType)))
+      .colExpr(parseCached(expr))).toOption
 
   /** Interp.chainWrite's static shape (Interp.scala:227-253): a
     * root-based chain whose first write-shaped method is preceded only
@@ -3514,8 +3538,8 @@ object Lower {
         // the statically-known nesting is identity — the interpreter
         // keeps non-array elements in place (D:850-862). Spark's
         // flatten nulls the WHOLE result when an element is null
-        // (probed), but the interpreter keeps the null as an element —
-        // substitute [null] before splicing.
+        // (DocColumnSpec pins it), but the interpreter keeps the null
+        // as an element — substitute [null] before splicing.
         var d = if (args.isEmpty) 1L else intLit(args, 0)
         var cur = c; var dt: DataType = at
         var go = true
@@ -3723,7 +3747,7 @@ object Lower {
   private def numSeqOp(name: String, xs: Column, args: Vector[Arg]): Column = {
     val nullD = lit(null).cast("double")
     val emptyD = array().cast("array<double>")
-    def prevOf(acc: Column) = get(acc, size(acc) - 1) // empty → null (probed)
+    def prevOf(acc: Column) = get(acc, size(acc) - 1) // empty → null (DocColumnSpec pins it)
     name match {
       case "lag" | "lead" =>
         val n = if (args.isEmpty) 1 else intLit(args, 0).toInt
@@ -3735,7 +3759,7 @@ object Lower {
         if (name == "lag") concat(pads, slice(xs, lit(1), kept))
         else concat(slice(xs, lit(n + 1), kept), pads)
       case "diff_window" =>
-        // zip_with pads the empty xs against prev=[null] (probed), so
+        // zip_with pads the empty xs against prev=[null] (DocColumnSpec pins it), so
         // guard the empty receiver explicitly
         val prev = concat(array(nullD), slice(xs, lit(1), greatest(size(xs) - 1, lit(0))))
         when(size(xs) === 0, emptyD).otherwise(
@@ -3747,7 +3771,7 @@ object Lower {
       case "cum_max" | "cummax" | "cum_min" | "cummin" =>
         val wantMax = name == "cum_max" || name == "cummax"
         // scan: best-so-far carries over null elements; greatest/least
-        // skip the null best before the first observation (probed)
+        // skip the null best before the first observation (DocColumnSpec pins it)
         aggregate(xs, emptyD, (acc, x) => concat(acc, array(
           when(x.isNull, prevOf(acc)).otherwise(
             if (wantMax) greatest(prevOf(acc), x) else least(prevOf(acc), x)))))
@@ -4961,7 +4985,7 @@ object Lower {
 
   /** JValue.eq (JValue.scala:65-77) against the evaluated argument:
     * cross-kind numeric compares by value; NaN ≠ NaN (Spark's <=> says
-    * true — probed — so fractional lanes guard isnan); kind mismatch is
+    * true — DocColumnSpec pins it — so fractional lanes guard isnan); kind mismatch is
     * statically never equal. Returns the target VALUE to letRow-bind
     * (the test runs inside filter/transform lambdas, where an unbound
     * derived target would re-evaluate per element) and the test over

@@ -340,4 +340,42 @@ class DocColumnSpec extends SparkSpec {
     assert(!plan.contains("ScalaUDF") && !plan.contains("BatchEvalPython"), plan)
     assert(plan.contains("WholeStageCodegen") || plan.contains("Project"), plan)
   }
+
+  test("Spark array and string edge behaviours the native lanes rely on") {
+    // Lower.scala's array/string lanes cite these; a Spark upgrade that
+    // changes one must fail here, not silently diverge from the interpreter
+    val one = spark.range(1).toDF()
+    def v(c: org.apache.spark.sql.Column): Any = one.select(c).head().get(0)
+    val a = array(lit(1), lit(2), lit(3))
+    val emptyI = array().cast("array<int>")
+    assert(v(slice(a, lit(1), lit(0))) == Seq())
+    assert(v(slice(a, lit(2), lit(5))) == Seq(2, 3))
+    val neg = intercept[Exception](v(slice(a, lit(1), lit(-1))))
+    assert(neg.getMessage.contains("INVALID_PARAMETER_VALUE.LENGTH"), neg.getMessage)
+    assert(v(get(a, lit(-1))) == null)
+    assert(v(get(a, lit(9))) == null)
+    assert(v(get(emptyI, size(emptyI) - 1)) == null)
+    assert(v(flatten(array(array(lit(1)), lit(null).cast("array<int>"), array(lit(2))))) == null)
+    assert(v(array_position(array(lit("a"), lit("b"), lit("a")), lit("a"))) == 1L)
+    assert(v(array_position(array(lit("a")), lit("z"))) == 0L)
+    assert(v(sequence(lit(1), lit(0))) == Seq(1, 0))
+    assert(v(greatest(lit(null).cast("double"), lit(5.0))) == 5.0)
+    assert(v(least(lit(null).cast("double"), lit(5.0))) == 5.0)
+    assert(v(zip_with(array(lit(1), lit(2)), array(lit(10)), (x, y) => x + y)) == Seq(11, null))
+    assert(v(array_repeat(lit(1), 0)) == Seq())
+    assert(v(array_repeat(lit(1), -1)) == Seq())
+    assert(v(lit(Double.NaN) <=> lit(Double.NaN)) == true)
+    assert(v(lit(-0.0) <=> lit(0.0)) == true)
+    assert(v(lit(-0.0).cast("string")) == "-0.0")
+    assert(v(conv(lit("FF"), 16, 10)) == "255")
+    assert(v(hex(encode(lit("\u00e9"), "UTF-8"))) == "C3A9")
+    assert(v(transform(a, (_, i) => i).cast("string")) == "[0, 1, 2]")
+    assert(v(array_contains(array(lit("a")), lit(null).cast("string"))) == null)
+    assert(v(length(upper(lit("\u00df")))) == 2)
+    assert(v(lower(lit("\u0130"))) == "i\u0307")
+    assert(v(substring(lower(lit("\u0130")), 1, 1)) == "i")
+    assert(v(aggregate(a.cast("array<double>"), array().cast("array<double>"),
+      (acc, x) => concat(acc, array(coalesce(get(acc, size(acc) - 1), lit(0.0)) + x)))
+      .cast("string")) == "[1.0, 3.0, 6.0]")
+  }
 }

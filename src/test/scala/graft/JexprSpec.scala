@@ -380,6 +380,23 @@ class JexprSpec extends AnyFunSuite {
       try { JValue.parse(src); () }
       catch { case _: JsonParseException => () }
     }
+    // keyword-rich alphabet (keywords, `..`, `@`, escapes), and whatever
+    // parses must evaluate or throw the interpreter's own errors
+    val words = """$.{}[]()"',:|->=<>!?+-*/%abc 123fin.."@`\n\t;#~^&ifelsetrypatchletforinwhenkindasnotandor"""
+    val doc = JValue.parse("""{"a": [1, 2, {"b": "x"}], "s": "hi", "n": 5}""")
+    (0 until 5000).foreach { _ =>
+      val len = 1 + rng.nextInt(60)
+      val src = Seq.fill(len)(words(rng.nextInt(words.length))).mkString
+      val compiled =
+        try Some(Jetro.compile(src)) catch { case _: ParseException => None }
+      compiled.foreach { c =>
+        try { c.evalValue(doc); () }
+        catch {
+          case _: EvalException | _: JsonParseException => ()
+          case _: StackOverflowError => () // deep nesting has no parser-side guard
+        }
+      }
+    }
   }
 
   test("quantifiers") {

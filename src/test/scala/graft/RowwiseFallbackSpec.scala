@@ -19,6 +19,14 @@ class RowwiseFallbackSpec extends SparkSpec {
   private def rowsOf(df: DataFrame): Vector[String] =
     df.toJSON.collect().toVector.sorted
 
+  /** Off the relational rung, the one rung decision names why the
+    * lowering refused: the exception, its message and the expression. */
+  private def assertBailed(e: String): Unit = {
+    val why = Graft.decide(spark, sf, e).bail
+    assert(why.exists(b => b.exception.nonEmpty && b.message.nonEmpty && b.expr == e),
+      s"no bail reason for $e: $why")
+  }
+
   // `rec` is the one construct with no relational lowering by design
   // (a fixpoint has no static plan, SURVEY §8); `rec(@)` is the
   // identity fixpoint, so wrapping any subexpression in it keeps the
@@ -30,6 +38,7 @@ class RowwiseFallbackSpec extends SparkSpec {
   test("element-wise non-lowerable pipeline picks the rowwise backend") {
     assert(!Graft.lowers(spark, sf, rowwiseExpr))
     assert(Graft.backend(spark, sf, rowwiseExpr) == "rowwise")
+    assertBailed(rowwiseExpr)
   }
 
   test("rowwise result equals the whole-document interpreter result") {
@@ -54,6 +63,7 @@ class RowwiseFallbackSpec extends SparkSpec {
     // sort_by over a non-lowerable key: neither relational nor row-wise
     val e = """$.supplier.sort_by(s_name.rec(@)).map({k: s_suppkey})"""
     assert(Graft.backend(spark, sf, e) == "document")
+    assertBailed(e)
   }
 
   test("a nested $ reference breaks per-row independence and is refused") {
@@ -65,6 +75,7 @@ class RowwiseFallbackSpec extends SparkSpec {
   test("lowerable pipelines never reach the rowwise rung") {
     val e = """$.supplier.filter(s_acctbal >= 0).map({k: s_suppkey, up: s_name.upper()})"""
     assert(Graft.backend(spark, sf, e) == "relational")
+    assert(Graft.decide(spark, sf, e).bail.isEmpty)
   }
 
   // ── round 8: explode / chain-writes / patch $ on the rowwise rung ──
@@ -72,6 +83,7 @@ class RowwiseFallbackSpec extends SparkSpec {
   test("explode(field) qualifies as element-wise and fans out per row") {
     val e = """$.documents.map({k: doc_id, w: text.words().rec(@)}).explode("w")"""
     assert(Graft.backend(spark, sf, e) == "rowwise")
+    assertBailed(e)
     val rw = Graft.rowwiseCompile(spark, sf, e).get
     assert(rowsOf(rw) == rowsOf(Graft.docFallback(spark, sf, e)))
     // genuinely fanned out: more word rows than documents
@@ -84,6 +96,7 @@ class RowwiseFallbackSpec extends SparkSpec {
     val e = """$.supplier{s_acctbal >= 0}.s_name.modify(@.words().len().rec(@))"""
     assert(!Graft.lowers(spark, sf, e))
     assert(Graft.backend(spark, sf, e) == "rowwise")
+    assertBailed(e)
     val rw  = Graft.rowwiseCompile(spark, sf, e).get
     val doc = Graft.docFallback(spark, sf, s"($e).supplier")
     val got = rowsOf(rw)
@@ -95,6 +108,7 @@ class RowwiseFallbackSpec extends SparkSpec {
   test("chain-delete over matching rows is a distributed filter-out") {
     val e = """$.supplier{s_acctbal < 0 or s_name.rec(@) == ""}.delete()"""
     assert(Graft.backend(spark, sf, e) == "rowwise")
+    assertBailed(e)
     val rw  = Graft.rowwiseCompile(spark, sf, e).get
     assert(rowsOf(rw) == rowsOf(Graft.docFallback(spark, sf, s"($e).supplier")))
   }
@@ -103,6 +117,7 @@ class RowwiseFallbackSpec extends SparkSpec {
     val e = """patch $ { supplier[*].s_name: @.upper().rec(@) }"""
     assert(!Graft.lowers(spark, sf, e))
     assert(Graft.backend(spark, sf, e) == "rowwise")
+    assertBailed(e)
     val rw = Graft.rowwiseCompile(spark, sf, e).get
     assert(rowsOf(rw) == rowsOf(Graft.docFallback(spark, sf, s"($e).supplier")))
   }
@@ -112,11 +127,13 @@ class RowwiseFallbackSpec extends SparkSpec {
     // walks each row's own nodes, so it distributes
     val e1 = """$.supplier.map({k: s_suppkey, a: {v: s_name.upper().rec(@)}})..v"""
     assert(Graft.backend(spark, sf, e1) == "rowwise")
+    assertBailed(e1)
     assert(rowsOf(Graft.rowwiseCompile(spark, sf, e1).get) ==
       rowsOf(Graft.docFallback(spark, sf, e1)))
     val e2 = """$.supplier.map({k: s_suppkey, a: {v: s_name.upper().rec(@), tag: "x"}})
                |..shape({v, tag})""".stripMargin
     assert(Graft.backend(spark, sf, e2) == "rowwise")
+    assertBailed(e2)
     assert(rowsOf(Graft.rowwiseCompile(spark, sf, e2).get) ==
       rowsOf(Graft.docFallback(spark, sf, e2)))
     // ..find's predicate ranges over ALL nodes including the receiver
@@ -247,6 +264,7 @@ class RowwiseFallbackSpec extends SparkSpec {
     val e = """$.supplier.map({k: s_suppkey, nw: s_name.words().len(),
               |               big: s_acctbal when s_acctbal > 100})""".stripMargin
     assert(Graft.backend(spark, sf, e) == "rowwise")
+    assertBailed(e)
     val before = c.evaluated.value
     val rw = Graft.rowwiseCompile(spark, sf, e).get // static schema: no inference pass
     assert(c.evaluated.value == before,
@@ -276,6 +294,7 @@ class RowwiseFallbackSpec extends SparkSpec {
   test("under the cap the document fallback still answers") {
     val e = """$.region.sort_by(r_name.rec(@)).map({k: r_regionkey})"""
     assert(Graft.backend(spark, sf, e) == "document")
+    assertBailed(e)
     assert(Graft.query(spark, sf, e).count() == 5)
   }
 
@@ -336,5 +355,40 @@ class RowwiseFallbackSpec extends SparkSpec {
     val mid = c.errored.value
     Graft.rowwiseCompile(spark, sf, rowwiseExpr).get.collect()
     assert(c.errored.value == mid)
+  }
+
+  test("Spark JSON inference behaviours the static schema and the scalar path rely on") {
+    import spark.implicits._
+    def inferred(lines: String*): String =
+      spark.read.json(spark.createDataset(lines)).schema.sql
+    // what Lower.rowwiseStaticSchema must reproduce: fields sorted by
+    // name at every depth, all-null fields as STRING, integral kinds as
+    // BIGINT, a whole double stays DOUBLE, long ∪ double widens to DOUBLE
+    assert(inferred("""{"z":1,"a":"x","m":true}""") ==
+      "STRUCT<a: STRING, m: BOOLEAN, z: BIGINT>")
+    assert(inferred("""{"o":{"z":1,"a":[{"q":2,"b":"s"}]}}""") ==
+      "STRUCT<o: STRUCT<a: ARRAY<STRUCT<b: STRING, q: BIGINT>>, z: BIGINT>>")
+    assert(inferred("""{"a":null,"b":1}""", """{"a":null,"b":2}""") ==
+      "STRUCT<a: STRING, b: BIGINT>")
+    assert(inferred("""{"a":[null],"b":[]}""", """{"a":null,"b":[]}""") ==
+      "STRUCT<a: ARRAY<STRING>, b: ARRAY<STRING>>")
+    assert(inferred("""{"a":3.0}""", """{"a":4.5}""") == "STRUCT<a: DOUBLE>")
+    assert(inferred("""{"a":1}""", """{"a":2.5}""") == "STRUCT<a: DOUBLE>")
+    assert(inferred("""{"a":1}""", """{"a":2,"b":"x"}""") == "STRUCT<a: BIGINT, b: STRING>")
+    assert(inferred("""{"a":true}""", """{"a":null}""") == "STRUCT<a: BOOLEAN>")
+    // bare-scalar streams (Graft.rowwiseCompile's inference path, and
+    // docFallback's read.json): the raw line lands in _corrupt_record,
+    // an explicit-schema PERMISSIVE read reproduces it, FAILFAST rejects
+    Seq(Seq("\"foo\"", "\"bar\""), Seq("5", "6.5")).foreach { lines =>
+      val ds = spark.createDataset(lines)
+      val schema = spark.read.json(ds).schema
+      assert(schema.simpleString == "struct<_corrupt_record:string>")
+      assert(spark.read.json(ds).collect().map(_.getString(0)).toSeq == lines)
+      assert(spark.read.schema(schema).json(ds).collect().map(_.getString(0)).toSeq == lines)
+      val err = intercept[Exception] {
+        spark.read.schema(schema).option("mode", "FAILFAST").json(ds).collect()
+      }
+      assert(err.getMessage.contains("MALFORMED_RECORD_IN_PARSING"), err.getMessage)
+    }
   }
 }
